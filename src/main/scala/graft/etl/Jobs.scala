@@ -199,43 +199,12 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     * join, not with a row-at-a-time driver loop. Batches must be
     * key-unique (dims are; a duplicate-key batch would insert both
     * copies, same as any SQL MERGE source). */
-  def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, s"upsert into $table needs at least one key column")
-    val stage = s"${table}_stage"
-    // quote identifiers the way Spark's JDBC writer quotes COLUMN names
-    // it creates (case-preserved; also covers "unit price"). Table names
-    // pass through the writer verbatim, so the stage is created under
-    // its quoted name explicitly to match the statements below.
-    def q(id: String) = "\"" + id + "\""
-    val frame = writerFrame(table, df)
-    frame.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("batchsize", batchSize)
-      .jdbc(url, q(stage), props)
-    val cols = frame.schema.fieldNames.map(q).mkString(", ")
-    val matchCond = keys
-      .map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
-    val delete =
-      s"DELETE FROM ${q(table)} WHERE EXISTS (" +
-        s"SELECT 1 FROM ${q(stage)} s WHERE $matchCond)"
-    val insert =
-      s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM ${q(stage)}"
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      try {
-        st.executeUpdate(delete)
-        st.executeUpdate(insert)
-        conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-      val drop = conn.createStatement()
-      try { drop.executeUpdate(s"DROP TABLE ${q(stage)}"); conn.commit() }
-      finally drop.close()
-    } finally conn.close()
-  }
+  def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit =
+    viaStage("upsert", table, df, keys) { (stage, cols, matched) =>
+      Seq(
+        s"DELETE FROM ${q(table)} WHERE $matched",
+        s"INSERT INTO ${q(table)} ($cols) SELECT $cols FROM $stage")
+    }
 
   /** [[upsert]] with the star schema's declared natural keys
     * ([[Schemas.warehouseKeys]]); unknown tables refuse loudly rather
@@ -265,40 +234,55 @@ final class JdbcWarehouseSink(url: String, props: java.util.Properties,
     * if only-changed-rows history is wanted. */
   def scd2Load(table: String, df: DataFrame, keys: Seq[String],
       effectiveDate: java.sql.Date): Unit = {
-    require(keys.nonEmpty, s"scd2Load into $table needs at least one key column")
-    val stage = s"${table}_stage"
-    def q(id: String) = "\"" + id + "\""
+    val d = s"DATE('$effectiveDate')"
+    viaStage("scd2Load", table, df, keys) { (stage, cols, matched) =>
+      Seq(
+        s"UPDATE ${q(table)} SET ${q("valid_to")} = $d, " +
+          s"${q("is_current")} = false " +
+          s"WHERE ${q("is_current")} = true AND $matched",
+        s"INSERT INTO ${q(table)} ($cols, ${q("valid_from")}, " +
+          s"${q("valid_to")}, ${q("is_current")}) " +
+          s"SELECT $cols, $d, CAST(NULL AS DATE), true FROM $stage")
+    }
+  }
+
+  /** Quote an identifier the way Spark's JDBC writer quotes COLUMN names
+    * it creates (case-preserved; also covers "unit price"). */
+  private def q(id: String) = "\"" + id + "\""
+
+  /** The set-based load both [[upsert]] and [[scd2Load]] run: land the
+    * batch in `<table>_stage` through the parallel writer, then execute
+    * `statements(stage, cols, matched)` in ONE transaction (rolled back
+    * on any failure) and drop the stage. `stage` is the quoted stage
+    * name, `cols` the quoted batch columns, and `matched` an
+    * `EXISTS (…)` predicate true for target rows whose `keys` appear in
+    * the stage. Table names pass through the writer verbatim, so the
+    * stage is created under its quoted name to match the statements. */
+  private def viaStage(op: String, table: String, df: DataFrame,
+      keys: Seq[String])(
+      statements: (String, String, String) => Seq[String]): Unit = {
+    require(keys.nonEmpty, s"$op into $table needs at least one key column")
+    val stage = q(s"${table}_stage")
     val frame = writerFrame(table, df)
     frame.write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("batchsize", batchSize)
-      .jdbc(url, q(stage), props)
+      .jdbc(url, stage, props)
     val cols = frame.schema.fieldNames.map(q).mkString(", ")
-    val matchCond = keys
-      .map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
-    val d = "'" + effectiveDate.toString + "'"
-    val close =
-      s"UPDATE ${q(table)} SET ${q("valid_to")} = DATE($d), " +
-        s"${q("is_current")} = false " +
-        s"WHERE ${q("is_current")} = true AND EXISTS (" +
-        s"SELECT 1 FROM ${q(stage)} s WHERE $matchCond)"
-    val insert =
-      s"INSERT INTO ${q(table)} ($cols, ${q("valid_from")}, " +
-        s"${q("valid_to")}, ${q("is_current")}) " +
-        s"SELECT $cols, DATE($d), CAST(NULL AS DATE), true FROM ${q(stage)}"
+    val matched = s"EXISTS (SELECT 1 FROM $stage s WHERE " +
+      keys.map(k => s"s.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ") + ")"
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
       try {
-        st.executeUpdate(close)
-        st.executeUpdate(insert)
+        statements(stage, cols, matched).foreach(sql => st.executeUpdate(sql))
         conn.commit()
       } catch {
         case e: Throwable => conn.rollback(); throw e
       } finally st.close()
       val drop = conn.createStatement()
-      try { drop.executeUpdate(s"DROP TABLE ${q(stage)}"); conn.commit() }
+      try { drop.executeUpdate(s"DROP TABLE $stage"); conn.commit() }
       finally drop.close()
     } finally conn.close()
   }

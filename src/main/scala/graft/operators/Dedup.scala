@@ -237,11 +237,13 @@ object Dedup {
       .agg(graft.functions.GraftFunctions.minhash(col("w"), numHashes).as("sig"),
         count(lit(1)).as("n_toks"))
 
-  /** One (band_idx, band_hash) row per band: the single banding
-    * construction shared by every LSH variant — `sigCol` abstracts where
-    * signature element i lives (array slot vs column), `bandHash` the
-    * band-hash family (xxhash64 in production, md5 in the
-    * oracle-portable pipeline).
+  /** LSH banding over an array<long> signature column: one (band_idx,
+    * band_hash) row per band, band_hash = xxhash64 of the band's slice
+    * and its index. The signature frame MUST also carry an `n_toks`
+    * set-size column (as produced by [[minhashSignaturesAgg]]) — it rides
+    * along so candidate pairs emerge with both set sizes attached and the
+    * length-filter prune can run before the wide token-array joins; a
+    * caller-built frame without it fails to resolve.
     *
     * `carryAll = true` additionally keeps the doc's FULL band-hash array
     * (`bhs`, band order) on every exploded row — the extra width
@@ -249,47 +251,19 @@ object Dedup {
     * [[lshCandidatesFirstCollision]] its shuffle-free pair dedup. The
     * default stays narrow: it is the schema [[BandIndex]] persists, and
     * the cross-corpus paths keep their `distinct`. */
-  private def bandedExplode(signatures: DataFrame, numHashes: Int, bands: Int,
-      sigCol: Int => Column,
-      bandHash: (Seq[Column], Int) => Column,
+  def lshBandsFromSig(signatures: DataFrame, numHashes: Int, bands: Int,
       carryAll: Boolean = false): DataFrame = {
     val rows = numHashes / bands
     val hashCols = (0 until bands).map { b =>
-      val slice = (0 until rows).map(r => sigCol(b * rows + r))
-      bandHash(slice, b)
+      val slice = (0 until rows).map(r => element_at(col("sig"), b * rows + r + 1))
+      xxhash64(slice :+ lit(b): _*)
     }
-    // n_toks rides along so candidate pairs emerge with both set sizes
-    // attached for free (the length-filter prune needs them BEFORE the
-    // wide token-array joins)
     val exploded = signatures
       .select(col("doc_id"), col("n_toks"), array(hashCols: _*).as("bhs"))
       .select(col("doc_id"), col("n_toks"), col("bhs"),
         posexplode(col("bhs")).as(Seq("band_idx", "band_hash")))
     if (carryAll) exploded else exploded.drop("bhs")
   }
-
-  private def xxBandHash(slice: Seq[Column], b: Int): Column =
-    xxhash64(slice :+ lit(b): _*)
-
-  /** LSH banding over an array<long> signature column. The signature
-    * frame MUST also carry an `n_toks` set-size column (as produced by
-    * [[minhashSignaturesAgg]]) — it rides along into the candidate pairs
-    * so the length-filter prune can run before the wide token-array
-    * joins; a caller-built frame without it fails to resolve. */
-  def lshBandsFromSig(signatures: DataFrame, numHashes: Int, bands: Int,
-      carryAll: Boolean = false): DataFrame =
-    bandedExplode(signatures, numHashes, bands,
-      i => element_at(col("sig"), i + 1), xxBandHash, carryAll)
-
-  /** LSH banding over minhash signatures: split the signature into
-    * `bands` groups of rows, hash each band, and emit (doc_id, band_idx,
-    * band_hash) — docs sharing any (band_idx, band_hash) are candidates.
-    * Probability a pair with Jaccard s collides: 1-(1-s^r)^b. Like
-    * [[lshBandsFromSig]], requires an `n_toks` column on the signature
-    * frame ([[minhashSignatures]] produces it). */
-  def lshBands(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    bandedExplode(signatures, numHashes, bands,
-      i => col(s"sig_$i"), xxBandHash)
 
   /** Candidate pairs from LSH banding (distinct on the pair), with both
     * set sizes attached (n is functionally dependent on the id, so the

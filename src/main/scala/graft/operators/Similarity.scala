@@ -240,8 +240,11 @@ object Similarity {
     * one-time broadcast fetch. */
   private[operators] def maxInlineCentroidBytes(
       spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.nearestCentroid.maxInlineBytes")
-      .map(_.toLong).getOrElse(4L << 20)
+    spark.conf.getOption("graft.nearestCentroid.maxInlineBytes").map { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        "graft.nearestCentroid.maxInlineBytes must be a byte count " +
+          s"(a long), got '$v'"))
+    }.getOrElse(4L << 20)
 
   /** argmax-by-cosine over the centroid set — the k-means / IVF E-step.
     *

@@ -391,24 +391,13 @@ object TextOps {
           lit("pplBuckets: lm_score <= -100 breaks the packed rank key: "),
           col("lm_score").cast("string"))).cast("long"))
       .otherwise(packed)
-    // Persist the rank-key boundaries as catalog state (idempotent; one
-    // sketch pass on the session's first call, every later consumer
-    // reads nb−1 doubles IN-PLAN). Boundary values are correctness-
-    // neutral (any sorted array partitions the order), so serving stale
-    // boundaries after a corpus change only skews bucket balance.
-    //
-    // The scored frame is CACHED (r16): a COLD run — production first
-    // call, and every bench-timed run under the r16 pay-the-build
-    // posture, which drops persisted boundaries before each measured
-    // query — otherwise executes the lmScore pipeline three times (the
-    // boundary sketch, TotalOrder's totals branch, and the data branch).
-    // The cache is the narrow per-doc (id, score) frame, not the corpus
-    // text, so it is metadata-sized at any scale; measured 3.37 → ~2.0 s
-    // at bench sf under the cold posture. (r15 removed this cache
-    // because with SERVED boundaries only one execution remained; the
-    // posture ruling flipped that trade back.)
+    // The narrow per-doc (id, score, key) frame is cached once: TotalOrder
+    // reads it three times (the boundary sketch, the totals branch and
+    // the data branch), and uncached each read would re-run the lmScore
+    // pipeline over the corpus text. TotalOrder draws the rank-key
+    // boundaries once per plan; their values only affect bucket balance,
+    // never the ranks.
     val keyed = graft.operators.CacheOnce(scored.withColumn("_k", key))
-    TotalOrder.persistBoundaries(keyed, "_k")
     val ranked = TotalOrder.globalRowNumber(keyed, "_k", "_rank")
     val q = floor(col("n_docs") / lit(k)).cast("long")
     val rem = (col("n_docs") % lit(k)).cast("long")

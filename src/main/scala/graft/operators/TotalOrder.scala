@@ -1,18 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.core.SourceFingerprint
 
 /** Scale-safe total-order primitives: global row numbers and global
   * running sums WITHOUT the single-partition window collapse.
   *
   * `Window.orderBy(k)` with no partition spec moves the whole dataset to
-  * one partition (Spark warns "No Partition Defined for Window
-  * operation") — correct at toy scale, dead at 100 TB. The classic
-  * two-pass partition-offset form used here produces identical output:
+  * one partition. The two-pass partition-offset form used here produces
+  * identical output:
   *
   *  1. Bucket rows so buckets are globally ordered (every value in bucket
   *     i sorts before every value in bucket i+1): a global order = bucket
@@ -20,59 +18,40 @@ import graft.core.SourceFingerprint
   *  2. Per-bucket totals (count / sum of the weight) are aggregated to
   *     one row per bucket — at most `spark.sql.shuffle.partitions` rows,
   *     i.e. metadata-sized at any data scale.
-  *  3. Each bucket's PREFIX offset (total over all lower buckets) comes
-  *     from a triangular self-join over that tiny totals frame, and is
-  *     broadcast back onto the data.
+  *  3. Each bucket's PREFIX offset (total over all lower buckets) is
+  *     folded from that tiny totals frame and broadcast back onto the
+  *     data.
   *  4. The global value = prefix offset + an intra-bucket window
   *     (hash-partitioned on the bucket id — linear, parallel).
   *
   * Two bucketing strategies, picked by the order column's type:
   *
-  *  - ORDERED-NUMERIC (ints, floats, decimals, dates, timestamps — every
-  *    caller in this library): bucket boundaries are in-plan approximate
-  *    quantiles of the order column, and the bucket id is a pure,
-  *    deterministic function of (row value, boundaries). The only
-  *    materialized state is the ONE-ROW boundary frame (session-memoized
-  *    driver-side so every consumer — across queries and cache clears —
-  *    reads a single sketch draw — approx-quantile merge order
-  *    is scheduling-dependent, so an unpinned boundary frame could give
-  *    the totals branch and the data branch different buckets). The full
-  *    data is NEVER cached and is shuffled exactly once (the window's
-  *    hash exchange on the bucket id). Compare the alternative below,
-  *    which samples the input on the driver, range-shuffles the data,
-  *    caches the whole frame, and THEN hash-shuffles it again for the
-  *    window — at 100 TB that cache is the difference between a
-  *    metadata-sized footprint and spilling the corpus to executor disk.
-  *    Monotone NON-strict double images are sufficient: a long→double
-  *    cast can collapse two adjacent keys to one double (≥2^53) but can
-  *    never invert their order, so a collision only merges their buckets
-  *    and the intra-bucket sort (on the original column) still orders
-  *    them exactly.
+  *  - ORDERED-NUMERIC (ints, floats, decimals, dates, timestamps): bucket
+  *    boundaries are approximate quantiles of the order column, drawn ONCE
+  *    per plan and carried in the plan as a one-row literal `_bnds` frame;
+  *    the bucket id is a pure function of (row value, boundaries), so the
+  *    totals branch and the data branch bucket every row identically.
+  *    Boundary VALUES never affect correctness: any sorted array merely
+  *    partitions the order, and prefix offsets aggregate from the
+  *    actually-bucketed totals — a different draw only changes bucket
+  *    balance. The data is never cached and is shuffled once (the
+  *    window's hash exchange on the bucket id). A monotone NON-strict
+  *    double image suffices: a long→double cast can collapse two adjacent
+  *    keys (≥2^53) but never invert them, so a collision merges their
+  *    buckets and the intra-bucket sort on the original column still
+  *    orders them exactly.
   *
-  *  - ANY ORDERABLE TYPE (strings, structs): fall back to
-  *    `repartitionByRange(orderKey)` with the ranged frame MATERIALIZED
-  *    ONCE (`.cache()`) so the totals branch and the data branch read the
-  *    same physical partitioning. Correctness requires this cache:
-  *    RangePartitioner draws its reservoir-sample boundaries with a seed
-  *    derived from the runtime RDD id, so two separate range exchanges
-  *    over the same input can draw DIFFERENT boundaries whenever the
-  *    sampler actually subsamples — exactly the regime this operator
-  *    exists for. (Quantile bucketing cannot serve strings:
-  *    percentile_approx has no order-preserving image for them, and a
-  *    byte-prefix image degenerates to one bucket on common-prefix keys.)
-  *
-  * The offsets are computed in-plan (no driver `collect`); caches are
-  * bounded by the harness's per-query `spark.catalog.clearCache()` and
-  * [[CacheOnce]] keeps either path idempotent across gates that share a
-  * canonical plan. A ScaleSpec property test pins that both paths'
-  * output is invariant to the partition count, matches the
-  * single-partition-window ground truth under adversarial skew, and that
-  * the string fallback stays live.
+  *  - ANY ORDERABLE TYPE (strings, structs): `repartitionByRange(orderKey)`
+  *    with the ranged frame materialized once ([[CacheOnce]]) so the totals
+  *    branch and the data branch read the same physical partitioning. The
+  *    cache is a correctness requirement: RangePartitioner seeds its
+  *    reservoir sample from the runtime RDD id, so two range exchanges
+  *    over one input can draw DIFFERENT boundaries. (percentile_approx has
+  *    no order-preserving image for strings.)
   *
   * Determinism: `orderCol` must be a total order (unique per row) for the
-  * running values to be well-defined — the same requirement the
-  * single-partition form and any SQL `OVER (ORDER BY k)` oracle already
-  * have under ties.
+  * running values to be well-defined — the same requirement any SQL
+  * `OVER (ORDER BY k)` has under ties.
   */
 object TotalOrder {
 
@@ -96,104 +75,30 @@ object TotalOrder {
     }
 
   /** Session-memoized boundary arrays: nb-1 doubles per entry, keyed by
-    * (input plan semantic hash, order image, nb). The sketch pass is a
-    * full input scan, and a `.cache()`d one-row frame does not survive a
-    * harness/session `clearCache()` — memoizing the VALUES driver-side
-    * (same lifecycle as Dedup's bloom bitmap memo) makes every later
-    * consumer of the same (input, order) pair skip the scan entirely.
-    * Correctness-neutral by construction: ANY sorted boundary array
-    * yields the same output values (bucket ids only partition the order;
-    * prefix offsets are aggregated from the actually-bucketed totals),
-    * so a stale or even semantically-colliding entry can only skew
-    * bucket balance, never results. Weak session keys; bounded by the
-    * distinct (input, order, nb) triples a session touches. */
+    * (input plan semantic hash, order image, nb). The sketch is a full
+    * input scan; memoizing the VALUES driver-side lets later consumers of
+    * the same (input, order) pair skip it, across `clearCache()` too. A
+    * stale or colliding entry can only skew bucket balance, never results
+    * (see the object doc). Weak session keys. */
   private val boundaryCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+    new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[(Int, String, Int), Option[Seq[Double]]]]()
 
-  /** Drop the session's memoized boundary arrays. Correctness never needs
-    * this (stale boundaries only skew bucket balance — see the cache doc);
-    * Bench calls it per measured query so timed TotalOrder consumers pay
-    * the sketch scan their oracle SQL implies rather than an
-    * amortized-probe number. */
-  def invalidateBoundaryMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** Drop the session's memoized boundary arrays, so the next consumer
+    * pays the sketch scan. Correctness never needs this. */
+  def invalidateBoundaryMemo(spark: SparkSession): Unit =
     boundaryCache.synchronized {
       val m = boundaryCache.get(spark)
       if (m != null) m.clear()
     }
-    statsCache.synchronized {
-      val m = statsCache.get(spark)
-      if (m != null) m.clear()
-    }
-  }
 
-  /** Drop every persisted boundary / order-stats table in the session
-    * catalog. Production never needs this — the tables are the
-    * ingest-landed serving state — but a MEASURED run must not serve
-    * state a previous run (or the warm sweep) built: the r15 verdict
-    * flagged that the stats table surviving into the timed region
-    * contradicts Bench's stated each-number-includes-its-build principle
-    * (and this round's contract forbids persisted intermediates keyed on
-    * the test corpus outright). Bench calls this per timed query so the
-    * gate's own ensureOrderStats pays the build inside the timed region
-    * — the plan SHAPE is unchanged (the gate rebuilds the table before
-    * its consumers plan), only the build cost is now honestly included. */
-  def dropPersistedStats(spark: org.apache.spark.sql.SparkSession): Unit = {
-    try {
-      spark.catalog.listTables().collect().foreach { tb =>
-        if (tb.name.startsWith("graft_ordstats_") ||
-            tb.name.startsWith("graft_boundaries_"))
-          try spark.sql(s"DROP TABLE IF EXISTS ${tb.name}")
-          catch {
-            case scala.util.control.NonFatal(e) => System.err.println(
-              s"graft.TotalOrder: dropPersistedStats(${tb.name}) failed: $e")
-          }
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"graft.TotalOrder: dropPersistedStats failed: $e")
-    }
-  }
+  /** No-op: TotalOrder persists no catalog tables. */
+  def dropPersistedStats(spark: SparkSession): Unit = ()
 
-  /** Catalog table holding one persisted boundary array for `key`.
-    * Boundary VALUES are correctness-neutral (any sorted array merely
-    * partitions the total order; prefix offsets aggregate from the
-    * actually-bucketed totals), so readers trust the table without a
-    * fingerprint check — worst case a stale array skews bucket balance,
-    * never results. */
-  private def boundaryTableFor(key: (Int, String, Int)): String = {
-    val crc = new java.util.zip.CRC32()
-    crc.update(s"${key._1}|${key._2}|${key._3}".getBytes("UTF-8"))
-    f"graft_boundaries_${crc.getValue}%08x"
-  }
-
-  private def readPersisted(spark: org.apache.spark.sql.SparkSession,
-      key: (Int, String, Int)): Option[Option[Seq[Double]]] = {
-    val name = boundaryTableFor(key)
-    if (!spark.catalog.tableExists(name)) None
-    else try {
-      val rows = spark.table(name).collect()
-      if (rows.isEmpty) None
-      else if (rows(0).isNullAt(0)) Some(None)
-      else Some(Some(rows(0).getSeq[Double](0)))
-    } catch {
-      // an unreadable boundary table only costs the sketch-scan fallback
-      // (boundary values are correctness-neutral) — but NonFatal only,
-      // so OOM/interrupts propagate instead of masquerading as a miss
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"graft.TotalOrder: persisted boundaries $name unreadable: $e")
-        None
-    }
-  }
-
-  /** The boundary array for (df, img, nb): session memo, then the
-    * persisted catalog table, then the sketch scan. The sketch is the
-    * only full input pass; both cheaper tiers serve the identical role
-    * because boundary values are correctness-neutral (see
-    * [[boundaryTableFor]]). */
-  private def boundariesFor(df: DataFrame, img: Column, nb: Int,
-      probs: Seq[Column]): Option[Seq[Double]] = {
+  /** The boundary array for (df, img, nb): the session memo, else one
+    * sketch scan (collected and memoized). None on an empty input. */
+  private def boundariesFor(df: DataFrame, img: Column, nb: Int)
+      : Option[Seq[Double]] = {
     val spark = df.sparkSession
     val perSession = boundaryCache.synchronized {
       val existing = boundaryCache.get(spark)
@@ -205,271 +110,33 @@ object TotalOrder {
         m
       }
     }
-    val key = (df.semanticHash(), img.toString, nb)
-    perSession.getOrElseUpdate(key,
-      readPersisted(spark, key).getOrElse {
-        val row = df.agg(
-          percentile_approx(img, array(probs: _*), lit(10000)).as("_bnds"))
-          .collect()(0)
-        if (row.isNullAt(0)) None else Some(row.getSeq[Double](0))
-      })
+    perSession.getOrElseUpdate((df.semanticHash(), img.toString, nb), {
+      val probs = (1 until nb).map(i => lit(i.toDouble / nb))
+      val row = df.agg(
+        percentile_approx(img, array(probs: _*), lit(10000)).as("_bnds"))
+        .collect()(0)
+      if (row.isNullAt(0)) None else Some(row.getSeq[Double](0))
+    })
   }
 
-  /** The one-row `_bnds` frame for the bucketing cross-join. Tier order:
-    * persisted boundary table READ IN-PLAN (the tiny scan folds into the
-    * consumer's own job as a broadcast — no separate collect round-trip,
-    * which on a scheduling-floor-bound gate is a whole extra job), then
-    * the session memo (local literal frame), then the sketch scan
-    * (collected and memoized). The table tier comes FIRST even when the
-    * memo is warm: consumers must build the SAME plan shape whether or
-    * not the memo survived (a memo-dependent shape means a cold run
-    * compiles different generated code than the warm run that preceded
-    * it — measured as a whole Janino+JIT pass inside a bench's timed
-    * region). The in-plan tier is deterministic without memoization:
-    * both the totals branch and the data branch broadcast the SAME
-    * one-row table, so there is exactly one boundary draw by
-    * construction. */
-  private def boundariesFrame(df: DataFrame, img: Column, nb: Int,
-      probs: Seq[Column]): DataFrame = {
+  /** The one-row literal `_bnds` frame both bucketing branches
+    * cross-join: one boundary draw per plan by construction. */
+  private def boundariesFrame(df: DataFrame, img: Column, nb: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val key = (df.semanticHash(), img.toString, nb)
-    val name = boundaryTableFor(key)
-    val persisted =
-      try {
-        if (spark.catalog.tableExists(name))
-          Some(spark.table(name).select(col("_bnds")))
-        else None
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"graft.TotalOrder: boundary table $name unreadable: $e")
-          None
-      }
-    persisted.getOrElse(
-      Seq(boundariesFor(df, img, nb, probs)).toDF("_bnds"))
-  }
-
-  /** Persist the boundary array for (df, orderCol) into the session
-    * catalog, so COLD consumers of the same (input, order) pair — a new
-    * session, or a bench run with the memo invalidated — read nb−1
-    * doubles from a tiny table instead of re-sketching the corpus. The
-    * versioned-state analogue of [[BandIndex]]: an ingest pipeline lands
-    * boundaries once next to the data it lands, and every later shard /
-    * budget / split job starts from them. Explicit on purpose (the read
-    * path never writes): idempotent, a no-op when the table already
-    * exists or the order type has no numeric image (the range fallback
-    * re-samples by construction). */
-  def persistBoundaries(df: DataFrame, orderCol: String): Unit =
-    doubleImage(df.schema(orderCol).dataType, col(orderCol)).foreach { img =>
-      val spark = df.sparkSession
-      val nb = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      if (nb > 1) {
-        val key = (df.semanticHash(), img.toString, nb)
-        if (!spark.catalog.tableExists(boundaryTableFor(key))) try {
-          val probs = (1 until nb).map(i => lit(i.toDouble / nb))
-          val values = boundariesFor(df, img, nb, probs)
-          // a previous JVM's managed location may survive its
-          // (in-memory) catalog entry and block re-creation
-          graft.core.Warehouse.reclaimOrphan(spark, boundaryTableFor(key))
-          import spark.implicits._
-          Seq(values).toDF("_bnds")
-            .write.mode("overwrite").saveAsTable(boundaryTableFor(key))
-        } catch {
-          // boundary values are correctness-neutral, so a session
-          // without warehouse write access must not fail the query the
-          // persist was accelerating — consumers degrade to the session
-          // memo / sketch-scan tiers (boundariesFor memoized the draw
-          // above, so the current session pays nothing extra). NonFatal
-          // only: OOM/interrupts propagate.
-          case scala.util.control.NonFatal(e) =>
-            System.err.println("graft.TotalOrder: boundary persist " +
-              s"${boundaryTableFor(key)} failed (degrading to the " +
-              s"sketch fallback): $e")
-        }
-      }
-    }
-
-  // --------------------------------------------------------------------
-  // Persisted order statistics: boundaries + per-bucket weighted totals,
-  // fingerprinted on the source files. Boundaries alone are
-  // correctness-neutral (any sorted array partitions the order), but
-  // TOTALS are not — a stale total gives a wrong prefix offset and a
-  // silently wrong running sum — so unlike the boundary table this state
-  // is only ever served when [[graft.core.SourceFingerprint]] of the
-  // input's files matches the fingerprint recorded at build time; any
-  // mismatch logs and falls back to the in-plan computation. This is the
-  // BandIndex/IvfIndex lifecycle applied to the total-order family: an
-  // ingest pipeline lands the stats once next to the data, and every
-  // later budget-bounded shard cut reads ~nb numbers instead of
-  // re-scanning the corpus — the bounded cum-sum path below prunes the
-  // SCAN with a literal boundary predicate, tokenizes (or otherwise
-  // projects) only the buckets that can contribute kept rows, and adds
-  // prefix offsets as literals: zero aggregates, zero joins, one window
-  // exchange over ~⌈budget/bucket⌉ buckets at any corpus size.
-  // --------------------------------------------------------------------
-
-  private def ordStatsTableFor(key: (Int, String, Int), weightCol: String)
-      : String = {
-    val crc = new java.util.zip.CRC32()
-    crc.update(s"${key._1}|${key._2}|${key._3}|$weightCol".getBytes("UTF-8"))
-    f"graft_ordstats_${crc.getValue}%08x"
-  }
-
-  /** Session memo over the one-row stats tables, keyed by table name and
-    * holding (fingerprint, boundaries, totals). Unlike the boundary memo
-    * this one is fingerprint-GUARDED at every probe: the caller
-    * recomputes the input's current file fingerprint (a free driver-side
-    * fold over already-listed metadata) and a mismatched entry is
-    * ignored, so a data rewrite can never serve stale totals from the
-    * memo any more than from the table. It exists because a warm serve
-    * otherwise pays a driver collect JOB per gate execution for a row
-    * that cannot have changed while the fingerprint holds — the same
-    * extra-job class boundariesFrame's doc signs. Cleared by
-    * [[invalidateBoundaryMemo]] (one lifecycle: Bench resets both so
-    * timed queries pay the cold read their production cold path
-    * implies). */
-  private val statsCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[
-        String, (Long, IndexedSeq[Double], Map[Int, Long])]]()
-
-  private def statsMemo(spark: org.apache.spark.sql.SparkSession) =
-    statsCache.synchronized {
-      val existing = statsCache.get(spark)
-      if (existing != null) existing
-      else {
-        val m = scala.collection.concurrent.TrieMap
-          .empty[String, (Long, IndexedSeq[Double], Map[Int, Long])]
-        statsCache.put(spark, m)
-        m
-      }
-    }
-
-  /** Persist boundaries AND per-bucket totals of `weightCol` over
-    * `orderCol` order for `df`, fingerprinted on the input's files.
-    * Idempotent: a no-op when the table exists with a matching
-    * fingerprint; rebuilds (the data changed) on mismatch. Skips — with
-    * a stderr note, never an error — when the order type has no numeric
-    * image, the weight does not aggregate to BIGINT (float sums are
-    * order-sensitive, so served prefixes could drift from in-plan ones),
-    * the input has no fingerprintable file leaf (nothing to witness
-    * staleness with), or the input is empty. Also lands the plain
-    * boundary table so the unserved fallback path keeps its own serving
-    * tier. */
-  def ensureOrderStats(df: DataFrame, orderCol: String,
-      weightCol: String): Unit =
-    doubleImage(df.schema(orderCol).dataType, col(orderCol)).foreach { img =>
-      val spark = df.sparkSession
-      val nb = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      if (nb > 1) {
-        persistBoundaries(df, orderCol)
-        val key = (df.semanticHash(), img.toString, nb)
-        val name = ordStatsTableFor(key, weightCol)
-        SourceFingerprint.ofCovered(df) match {
-          case None =>
-            System.err.println(s"graft.TotalOrder: $name not persisted — " +
-              "input has no fingerprintable file leaf, staleness could " +
-              "not be witnessed")
-          case Some(fp) =>
-            // validity probe IS the serve-path read (memoized), so a
-            // warm ensure+serve pair costs one collect cold, zero warm
-            val current = servedOrderStats(df, img, nb, weightCol)
-            if (current.isEmpty) try {
-              val probs = (1 until nb).map(i => lit(i.toDouble / nb))
-              boundariesFor(df, img, nb, probs) match {
-                case None =>
-                  System.err.println(s"graft.TotalOrder: $name not " +
-                    "persisted — empty input")
-                case Some(bnds) =>
-                  val totals = df
-                    .withColumn("_pid", bucketIdForLit(img, bnds.toIndexedSeq))
-                    .groupBy(col("_pid"))
-                    .agg(sum(col(weightCol)).as("_ptot"))
-                  if (totals.schema("_ptot").dataType != LongType)
-                    System.err.println(s"graft.TotalOrder: $name not " +
-                      s"persisted — sum($weightCol) is not BIGINT " +
-                      "(float prefix sums are order-sensitive)")
-                  else {
-                    val rows = totals.collect() // ≤ nb rows by construction
-                    val pids = rows.map(_.getInt(0))
-                    val tots = rows.map(r =>
-                      if (r.isNullAt(1)) 0L else r.getLong(1))
-                    graft.core.Warehouse.reclaimOrphan(spark, name)
-                    import spark.implicits._
-                    Seq((fp, weightCol, bnds, pids.toSeq, tots.toSeq))
-                      .toDF("_fp", "_wt", "_bnds", "_pids", "_ptots")
-                      .write.mode("overwrite").saveAsTable(name)
-                    statsMemo(spark).put(name,
-                      (fp, bnds.toIndexedSeq, pids.zip(tots).toMap))
-                  }
-              }
-            } catch {
-              // same degradation contract as persistBoundaries: a session
-              // without warehouse write access must not fail the query
-              case scala.util.control.NonFatal(e) =>
-                System.err.println("graft.TotalOrder: order-stats persist " +
-                  s"$name failed (consumers fall back in-plan): $e")
-            }
-        }
-      }
-    }
-
-  /** The fingerprint-checked stats for (df, img, nb, weightCol):
-    * `Some((boundaries, bucket→total))` only when the persisted
-    * fingerprint matches the input's CURRENT files — otherwise None
-    * (with a stderr note on a witnessed mismatch, the caller computes
-    * in-plan). Served from the [[statsCache]] memo when its entry's
-    * fingerprint matches the current files, else from the table (and
-    * memoized). */
-  private def servedOrderStats(df: DataFrame, img: Column, nb: Int,
-      weightCol: String): Option[(IndexedSeq[Double], Map[Int, Long])] = {
-    val spark = df.sparkSession
-    val key = (df.semanticHash(), img.toString, nb)
-    val name = ordStatsTableFor(key, weightCol)
-    SourceFingerprint.ofCovered(df).flatMap { fp =>
-      val memo = statsMemo(spark)
-      memo.get(name) match {
-        case Some((mfp, bnds, tots)) if mfp == fp => Some((bnds, tots))
-        case _ =>
-          try {
-            if (!spark.catalog.tableExists(name)) None
-            else spark.table(name).collect().headOption.flatMap { row =>
-              if (row.getLong(0) != fp || row.getString(1) != weightCol) {
-                System.err.println(s"graft.TotalOrder: $name is stale " +
-                  "(fingerprint mismatch — data changed since the stats " +
-                  "were landed); computing totals in-plan")
-                None
-              } else {
-                val bnds = row.getSeq[Double](2).toIndexedSeq
-                val totals = row.getSeq[Int](3).zip(row.getSeq[Long](4)).toMap
-                memo.put(name, (fp, bnds, totals))
-                Some((bnds, totals))
-              }
-            }
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"graft.TotalOrder: order-stats table $name unreadable: $e")
-              None
-          }
-      }
-    }
+    Seq(boundariesFor(df, img, nb)).toDF("_bnds")
   }
 
   /** Bucket id of `img` against the broadcast `_bnds` array: count of
     * boundaries strictly below the value, as a static binary-search
-    * when-tree (log2(nb) codegen'd comparisons per row — an `aggregate`
-    * fold over _bnds evaluates its lambda interpreted, measured 2.2x on
-    * the per-pass cost at 15M rows). Monotone non-decreasing in the
-    * total order, so bucket i < bucket i+1 holds. Upper-bound search is
-    * duplicate-safe: at each node, if img > bnds[mid+1] then every
-    * boundary at index <= mid+1 is < img (sorted), so the count is
-    * >= mid+1; otherwise none above mid is. A null img fails every
-    * comparison and descends to bucket 0 — the same place the range
-    * path puts null-first keys. Shared by the shared-exchange and
-    * bounded-prune bucketing paths (the subtle tie-safety argument must
-    * live exactly once). */
+    * when-tree (log2(nb) codegen'd comparisons per row; an `aggregate`
+    * fold over _bnds evaluates its lambda interpreted). Monotone
+    * non-decreasing in the total order, so bucket i < bucket i+1 holds.
+    * Upper-bound search is duplicate-safe: at each node, if img >
+    * bnds[mid+1] then every boundary at index <= mid+1 is < img (sorted),
+    * so the count is >= mid+1; otherwise none above mid is. A null img
+    * fails every comparison and descends to bucket 0 — the same place the
+    * range path puts null-first keys. */
   private def bucketIdFor(img: Column, nb: Int): Column = {
     def search(lo: Int, hi: Int): Column =
       if (lo == hi) lit(lo)
@@ -481,98 +148,38 @@ object TotalOrder {
     search(0, nb - 1)
   }
 
-  /** [[bucketIdFor]] against a driver-resident boundary array (the
-    * served-stats path): the same duplicate-safe upper-bound when-tree
-    * with the boundary VALUES folded in as literals — no `_bnds` column,
-    * no broadcast, pure codegen'd comparisons. Identical bucket function
-    * by construction (same search over the same sorted values). */
-  private def bucketIdForLit(img: Column, bnds: IndexedSeq[Double]): Column = {
-    val nb = bnds.length + 1
-    def search(lo: Int, hi: Int): Column =
-      if (lo == hi) lit(lo)
-      else {
-        val mid = (lo + hi) / 2
-        when(img > lit(bnds(mid)), search(mid + 1, hi))
-          .otherwise(search(lo, mid))
-      }
-    search(0, nb - 1)
-  }
-
   /** Ordered-numeric path: deterministic quantile-boundary bucketing.
-    * The one-row boundary frame is the ONLY materialized state — served
-    * from [[boundaryCache]] after the session's first sketch pass. */
+    * Both branches bucket the input map-side against the one-row `_bnds`
+    * literal: the totals branch aggregates per bucket before its exchange
+    * (at most nb partial rows per task), and the data branch joins the
+    * broadcast prefixes and then shuffles once on `_pid`, the
+    * partitioning the window needs. A caller's filter on `_prefix`
+    * pushes below that exchange and into the prefix side, so a bounded
+    * cut shuffles only the buckets that survive it.
+    *
+    * PRECONDITION: the two branches read `df` independently, so its plan
+    * must be DETERMINISTIC (no rand()/sample()/unordered limit upstream)
+    * — a plan that realizes different rows per read would total one
+    * realization and number another. Cache an expensive input projection
+    * (the token gates cache their per-doc counts). */
   private def quantilePrefixOffsets(df: DataFrame, img: Column,
       weight: Column): DataFrame = {
-    val spark = df.sparkSession
-    val nb = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nb = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (nb <= 1)
       // degenerate single bucket: the window itself is the whole order
       return df.withColumn("_pid", lit(0)).withColumn("_prefix", lit(0L))
-    val probs = (1 until nb).map(i => lit(i.toDouble / nb))
-    // one row, nb-1 doubles — a local-literal or in-plan-table frame, so
-    // both branches read ONE boundary draw and repeat consumers pay zero
-    // input I/O (tier order in [[boundariesFrame]])
-    val bnds = boundariesFrame(df, img, nb, probs)
-    // One explicit slim exchange on _pid, SHARED by the totals branch and
-    // the data branch via ReuseExchange: without it each branch re-runs
-    // the full input projection (for the token gates that is a per-doc
-    // regex tokenize — measured 0.46 s/pass at 10× bench sf, paid twice).
-    // With it the projection evaluates once map-side; the downstream
-    // window needs exactly this partitioning, so no second data exchange
-    // appears, and the totals aggregation runs in place on the shuffled
-    // slim rows.
-    val bucketed = df.crossJoin(broadcast(bnds))
-      .withColumn("_pid", bucketIdFor(img, nb))
-      .drop("_bnds")
-      .repartition(col("_pid"))
-    val totals = bucketed.groupBy(col("_pid")).agg(sum(weight).as("_ptot"))
-    bucketed.join(broadcast(prefixOf(totals)), Seq("_pid"))
-  }
-
-  /** Bounded-output variant of [[quantilePrefixOffsets]] for the
-    * global-LIMIT case (`out <= bound` downstream, unit weights): with a
-    * bound in hand, the shared-exchange shape is the WRONG trade — it
-    * ships the whole input through the `_pid` exchange before a filter
-    * that then discards all but ~⌈bound/bucket⌉ buckets. Here the
-    * totals branch aggregates the UNSHUFFLED frame (map-side partial
-    * counts; the exchange carries nb partials per task, not rows), the
-    * prefix frame broadcasts back onto a second map-side pass, the
-    * bound prunes BEFORE any data exchange, and only surviving-bucket
-    * rows are repartitioned for the window. Costs one extra scan of the
-    * input projection (the two branches no longer share an exchange) —
-    * the right trade exactly when the projection is cheap relative to
-    * shuffling the corpus, which unit-weight row numbering is; weighted
-    * cum-sums (whose projection is a per-doc tokenize) keep the shared
-    * exchange and filter after.
-    *
-    * PRECONDITION the shared-exchange path does not have: because the
-    * two branches scan `df` independently, the input plan must be
-    * DETERMINISTIC (no rand()/sample()/unordered limit upstream) — a
-    * plan that realizes different rows per scan would count one
-    * realization and number another. The same class of requirement as
-    * the operator's existing total-order contract on `orderCol`; the
-    * unbounded path additionally tolerates non-deterministic inputs
-    * only because its branches share one exchange. */
-  private def boundedCountPrefixOffsets(df: DataFrame, img: Column,
-      bound: Long): DataFrame = {
-    val spark = df.sparkSession
-    val nb = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (nb <= 1)
-      return df.withColumn("_pid", lit(0)).withColumn("_prefix", lit(0L))
-    val probs = (1 until nb).map(i => lit(i.toDouble / nb))
-    val bnds = boundariesFrame(df, img, nb, probs)
+    val bnds = boundariesFrame(df, img, nb)
     def bucketed = df.crossJoin(broadcast(bnds))
       .withColumn("_pid", bucketIdFor(img, nb))
       .drop("_bnds")
-    val totals = bucketed.groupBy(col("_pid")).agg(count(lit(1)).as("_ptot"))
+    val totals = bucketed.groupBy(col("_pid")).agg(sum(weight).as("_ptot"))
     bucketed.join(broadcast(prefixOf(totals)), Seq("_pid"))
-      .filter(col("_prefix") < bound)
       .repartition(col("_pid"))
   }
 
   /** Fallback for types without a numeric image: range partitioning with
-    * a single cached materialization (see scaladoc for why the cache is a
-    * correctness requirement here, not an optimization). */
+    * a single cached materialization (see the object doc for why the
+    * cache is a correctness requirement here, not an optimization). */
   private def rangePrefixOffsets(df: DataFrame, orderCol: String,
       weight: Column): DataFrame = {
     val parted = CacheOnce(df.repartitionByRange(col(orderCol))
@@ -581,45 +188,47 @@ object TotalOrder {
     parted.join(broadcast(prefixOf(totals)), Seq("_pid"))
   }
 
-  /** Prefix sum over a ≤numPartitions-row totals frame: a triangular join
-    * on this metadata-sized frame beats a window (which would itself be a
-    * single-partition WindowExec and trip the gate-wide plan audit). */
-  private def prefixOf(totals: DataFrame): DataFrame =
-    totals.as("a")
-      .join(totals.as("b"), col("b._pid") < col("a._pid"), "left")
-      .groupBy(col("a._pid").as("_pid"))
-      .agg(coalesce(sum(col("b._ptot")), lit(0L)).as("_prefix"))
+  /** Prefix sum over a ≤numPartitions-row totals frame, read ONCE: the
+    * totals gather into one array and each bucket's prefix folds the
+    * lower buckets' totals (nb² additions on nb numbers). A window would
+    * itself be a single-partition WindowExec and trip the gate-wide plan
+    * audit. The prefix has the type `sum(_ptot)` has. */
+  private def prefixOf(totals: DataFrame): DataFrame = {
+    val dt = totals.select(sum(col("_ptot"))).schema.head.dataType
+    val zero = lit(0).cast(dt)
+    totals.agg(collect_list(struct(col("_pid"), col("_ptot"))).as("_t"))
+      .select(explode(transform(col("_t"), a => struct(
+        a("_pid").as("_pid"),
+        aggregate(filter(col("_t"), b => b("_pid") < a("_pid")), zero,
+          (acc, b) => (acc + coalesce(b("_ptot").cast(dt), zero)).cast(dt))
+          .as("_prefix")))).as("_p"))
+      .select(col("_p._pid"), col("_p._prefix"))
+  }
 
   /** Global `row_number() OVER (ORDER BY orderCol)` as `out` (LongType),
     * identical to the single-partition window on a unique key.
     *
-    * NOTE eager materialization: for ordered-numeric order columns, the
-    * FIRST call per (input, order) pair in a session runs the boundary
-    * sketch scan at plan-BUILD time (a full input pass), even if the
-    * returned frame is never executed — the boundary values are memoized
-    * driver-side so every consumer reads one sketch draw (see
-    * [[boundaryCache]]). Later calls build lazily from the memo. */
+    * For ordered-numeric order columns the FIRST call per (input, order)
+    * pair in a session runs the boundary sketch scan at plan-BUILD time,
+    * even if the returned frame is never executed; later calls build
+    * lazily from the memo. */
   def globalRowNumber(df: DataFrame, orderCol: String, out: String): DataFrame =
     globalRowNumber(df, orderCol, out, None)
 
-  /** [[globalRowNumber]] with an optional bucket-pruning upper bound:
-    * when the caller will keep only `out <= bound` (a global-order
-    * LIMIT), every bucket whose row-count PREFIX is already >= bound
-    * can be dropped BEFORE the intra-bucket window — its rows all
-    * number past the bound (out = prefix + rn >= prefix + 1). The
-    * numbering of surviving rows is untouched (prefixes aggregate from
-    * the totals branch over ALL buckets), so this is output-equivalent
-    * to filtering after, but the window sorts ~⌈bound/bucket⌉ buckets
-    * instead of the whole input — the difference between "number the
-    * corpus, keep 100" and "number one bucket". */
   /** Bounds under which the bounded row-number path is served as a
     * TakeOrdered top-k instead of the two-pass prune. TakeOrdered holds
     * up to `bound` rows per task heap and merges ≤ bound rows on the
-    * driver — constant-bounded memory for a query-constant bound, the
-    * same class as the LIMIT the caller is about to apply anyway. Past
+    * driver — constant-bounded memory for a query-constant bound. Past
     * this the two-pass prune wins (nothing driver-resident). */
   val TopKLimitMax: Long = 1L << 20
 
+  /** [[globalRowNumber]] with an optional bucket-pruning upper bound:
+    * when the caller will keep only `out <= bound` (a global-order
+    * LIMIT), every bucket whose row-count PREFIX is already >= bound is
+    * dropped BEFORE the intra-bucket window — its rows all number past
+    * the bound. Surviving rows' numbering is untouched (prefixes
+    * aggregate over ALL buckets), so this is output-equivalent to
+    * filtering after. */
   def globalRowNumber(df: DataFrame, orderCol: String, out: String,
       upperBound: Option[Long]): DataFrame = {
     upperBound.foreach(b => require(b >= 1,
@@ -628,37 +237,25 @@ object TotalOrder {
     upperBound match {
     case Some(b) if b <= TopKLimitMax =>
       // Rank-with-LIMIT is a top-k: ONE scan with a per-partition heap
-      // (TakeOrderedAndProject) instead of the two-pass prune's two
-      // scans + totals aggregation + slim exchange — at any corpus size
-      // the data never shuffles at all. Works for every orderable type
-      // (no numeric image needed). The trailing rank window is
-      // unpartitioned but BOUNDED: its input is the ≤ b-row TakeOrdered
-      // output — the plan audit admits unpartitioned windows only above
-      // a literal global LIMIT, so an unbounded regression still flags.
-      // Ranks are exact for 1..min(b, n) (TakeOrdered returns the
-      // globally smallest b keys; orderCol is unique per the operator's
-      // total-order contract), which is the entire contract: the caller
-      // keeps only out <= b.
+      // (TakeOrderedAndProject); the data never shuffles. Works for every
+      // orderable type. The trailing rank window is unpartitioned but
+      // BOUNDED by the ≤ b-row TakeOrdered output — the plan audit admits
+      // unpartitioned windows only above a literal global LIMIT. Ranks
+      // are exact for 1..min(b, n), which is the entire contract: the
+      // caller keeps only out <= b.
       df.orderBy(col(orderCol)).limit(b.toInt)
         .withColumn(out,
           row_number().over(Window.orderBy(col(orderCol))).cast("long"))
     case _ =>
       val w = Window.partitionBy(col("_pid")).orderBy(col(orderCol))
-      val offsets = upperBound match {
-        case Some(b) =>
-          doubleImage(df.schema(orderCol).dataType, col(orderCol)) match {
-            // numeric order: prune BEFORE any data exchange (see
-            // boundedCountPrefixOffsets for the trade)
-            case Some(img) => boundedCountPrefixOffsets(df, img, b)
-            // range fallback (strings): the ranged frame is cached, so
-            // the post-join filter still prunes the window for free
-            case None =>
-              rangePrefixOffsets(df, orderCol, lit(1L))
-                .filter(col("_prefix") < b)
-          }
-        case None => withPrefixOffsets(df, orderCol, lit(1L))
+      val offsets = withPrefixOffsets(df, orderCol, lit(1L))
+      // out = prefix + rn >= prefix + 1, so a bucket with prefix >= b
+      // numbers entirely past the bound
+      val pruned = upperBound match {
+        case Some(b) => offsets.filter(col("_prefix") < b)
+        case None    => offsets
       }
-      offsets
+      pruned
         .withColumn(out, (col("_prefix") + row_number().over(w)).cast("long"))
         .drop("_pid", "_prefix")
   }}
@@ -666,9 +263,7 @@ object TotalOrder {
   /** Global running sum of `valueCol` over `orderCol` order as `out`.
     * `inclusive = true` is `ROWS UNBOUNDED PRECEDING AND CURRENT ROW`;
     * `false` is `... AND 1 PRECEDING` (0 for the first row).
-    * Same eager-materialization note as [[globalRowNumber]]: the first
-    * call per (input, order) pair runs the boundary sketch scan at
-    * plan-build time. */
+    * Same plan-build sketch note as [[globalRowNumber]]. */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
       out: String, inclusive: Boolean = true): DataFrame =
     globalCumSum(df, orderCol, valueCol, out, inclusive, None)
@@ -676,72 +271,28 @@ object TotalOrder {
   /** [[globalCumSum]] with an optional bucket-pruning upper bound: when
     * the caller will keep only rows with `out <= bound` (the token-budget
     * shard cut), every bucket whose PREFIX offset already exceeds the
-    * bound can be dropped BEFORE the intra-bucket window — its rows all
-    * have running sums past the bound. Output-equivalent to filtering
-    * after, but the window sorts ~one bucket instead of the corpus: the
-    * running sum is the prefix (untouched by the prune — it aggregates
-    * from the totals branch over ALL buckets) plus an intra-bucket term
-    * over the bucket's own rows, also untouched. TokenBudgetPeek
-    * measured the unpruned window + downstream materialization as the
-    * dominant term of the budget gate at 10× bench sf.
+    * bound is dropped BEFORE the intra-bucket window — its rows all have
+    * running sums past the bound. Output-equivalent to filtering after:
+    * the prefix aggregates over ALL buckets and the intra-bucket term
+    * over the bucket's own rows, neither touched by the prune.
     *
     * PRECONDITION: `valueCol` must be NON-NEGATIVE when `upperBound` is
     * set — the prune reasons "prefix already past the bound ⇒ every
-    * later running sum is too", which negative values (signed
-    * deltas/adjustments) break by bringing the sum back under the
-    * bound. Token/row counts satisfy it; pass None for signed values. */
+    * later running sum is too", which negative values break. Pass None
+    * for signed values. */
   def globalCumSum(df: DataFrame, orderCol: String, valueCol: String,
       out: String, inclusive: Boolean, upperBound: Option[Long]): DataFrame = {
     val upper = if (inclusive) 0L else -1L
     val w = Window.partitionBy(col("_pid")).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, upper)
-    // served-stats fast path (bounded cut over an ordered-numeric key
-    // with valid [[ensureOrderStats]] state): prune the SCAN to the
-    // buckets whose served prefix can still land under the bound, attach
-    // bucket ids and prefix offsets as literals, window the survivors.
-    // Output-identical to the in-plan path: the served totals carry the
-    // same bucket function over the same boundary draw, and the
-    // fingerprint check guarantees they were aggregated from exactly the
-    // bytes this plan will scan.
-    val served = upperBound.flatMap { b =>
-      doubleImage(df.schema(orderCol).dataType, col(orderCol)).flatMap { img =>
-        val nb = df.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt
-        if (nb <= 1) None
-        else servedOrderStats(df, img, nb, valueCol).map {
-          case (bnds, totals) =>
-            val prefixes = (0 until nb).scanLeft(0L) {
-              (acc, pid) => acc + totals.getOrElse(pid, 0L)
-            }.take(nb)
-            // kept: every bucket whose PREFIX is within the bound (its
-            // first row may still land under it) — same predicate the
-            // in-plan path applies post-aggregation
-            val lastKept = prefixes.lastIndexWhere(_ <= b)
-            val prunedDf =
-              if (lastKept >= nb - 1) df // all buckets survive
-              else if (lastKept < 0) df.filter(lit(false)) // b < 0: none
-              else df.filter(col(orderCol).isNull ||
-                img <= lit(bnds(lastKept))) // nulls bucket to 0, always kept
-            prunedDf
-              .withColumn("_pid", bucketIdForLit(img, bnds))
-              .withColumn("_prefix",
-                element_at(typedLit(prefixes), col("_pid") + 1))
-              .withColumn(out,
-                col("_prefix") + coalesce(sum(col(valueCol)).over(w), lit(0L)))
-              .drop("_pid", "_prefix")
-        }
-      }
+    val withOffsets = withPrefixOffsets(df, orderCol, col(valueCol))
+    val pruned = upperBound match {
+      case Some(b) => withOffsets.filter(col("_prefix") <= b)
+      case None    => withOffsets
     }
-    served.getOrElse {
-      val withOffsets = withPrefixOffsets(df, orderCol, col(valueCol))
-      val pruned = upperBound match {
-        case Some(b) => withOffsets.filter(col("_prefix") <= b)
-        case None    => withOffsets
-      }
-      pruned
-        .withColumn(out,
-          col("_prefix") + coalesce(sum(col(valueCol)).over(w), lit(0L)))
-        .drop("_pid", "_prefix")
-    }
+    pruned
+      .withColumn(out,
+        col("_prefix") + coalesce(sum(col(valueCol)).over(w), lit(0L)))
+      .drop("_pid", "_prefix")
   }
 }

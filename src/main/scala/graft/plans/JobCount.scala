@@ -69,19 +69,6 @@ object JobCount {
               .addAndGet(m.shuffleReadMetrics.totalBytesRead)
           }
       })
-    // drain the async listener bus before reading counters: the real
-    // waitUntilEmpty (private[spark]) via reflection, a bounded sleep as
-    // fallback — a fixed sleep under-reports on a loaded host (r15 advice)
-    def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val busM = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-        val bus = busM.invoke(sc)
-        val wait = bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .get
-        wait.invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(1000) }
     val byName = graft.SparkEntry.allQueries.map(q => q.name -> q).toMap
     names.foreach { n =>
       byName.get(n) match {
@@ -89,14 +76,13 @@ object JobCount {
           // same memo/cache hygiene as a timed bench query
           graft.operators.Dedup.invalidateBloomMemo(spark)
           graft.operators.TotalOrder.invalidateBoundaryMemo(spark)
-          graft.operators.TotalOrder.dropPersistedStats(spark)
           stageTasks.clear(); stageShufRead.clear()
           val (j0, s0, t0, c0) =
             (jobs.get(), stages.get(), tasks.get(), cpuNs.get())
           val w0 = System.nanoTime()
           q.run(spark, sfDir).count()
           val wall = (System.nanoTime() - w0) / 1e9
-          drainBus()
+          ListenerBus.drain(spark)
           println(f"[jobcount] $n%-28s jobs=${jobs.get() - j0}%3d " +
             f"stages=${stages.get() - s0}%3d tasks=${tasks.get() - t0}%5d " +
             f"wall=$wall%.3f cpu=${(cpuNs.get() - c0) / 1e9}%.3f")

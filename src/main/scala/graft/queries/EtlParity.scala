@@ -92,8 +92,8 @@ object EtlParity {
         |FROM events
         |WHERE ts > TIMESTAMP '2024-01-25 00:00:00'
         |ORDER BY event_id""".stripMargin) { (s, dir) =>
-      // strict-> watermark on the RAW physical column (layout-adaptive —
-      // the converted `ts` cannot push through its cast): the predicate
+      // strict-> watermark on the RAW physical column (the converted
+      // `ts` cannot push through its cast): the predicate
       // reaches the parquet row-group statistics (asserted by PlanAuditSpec)
       graft.core.Tables.eventsAfter(
           t(s, dir, "events"), "2024-01-25T00:00:00Z")

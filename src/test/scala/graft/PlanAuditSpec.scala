@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * are partial, and the hot paths stay inside whole-stage codegen. */
 class PlanAuditSpec extends SparkSpec {
 
+  private object AqeWalk
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private val dir = "/root/testdata/sf0.001"
 
   private def physicalPlan(name: String): String = {
@@ -52,16 +55,11 @@ class PlanAuditSpec extends SparkSpec {
 
   test("etl_incremental_delta: CDC timestamp predicate pushed to the scan") {
     val plan = physicalPlan("etl_incremental_delta")
-    // the ts_ns/ts_raw alias collapses to the physical column `ts` once
-    // the derived timestamp is pruned away — the raw predicate pushes.
-    // Assert the EXACT rendered literal per layout (a timezone or
-    // unit-conversion bug in eventsAfter must fail here, not only at the
-    // DuckDB gate): the NTZ literal under TIMESTAMP(MICROS), the raw
-    // nanos count under TIMESTAMP(NANOS).
-    val events = graft.core.Tables(spark, dir, "events")
-    val expected =
-      if (events.columns.contains("ts_raw")) "GreaterThan(ts,2024-01-25T00:00"
-      else "GreaterThan(ts," + graft.core.Tables.eventsTsNanos("2024-01-25T00:00:00Z")
+    // the ts_raw alias collapses to the physical column `ts` once the
+    // derived timestamp is pruned away — the raw predicate pushes.
+    // Assert the EXACT rendered NTZ literal (a timezone or conversion bug
+    // in eventsAfter must fail here, not only at the DuckDB gate).
+    val expected = "GreaterThan(ts,2024-01-25T00:00"
     assert(plan.contains(expected),
       s"exact watermark literal `$expected` must reach PushedFilters:\n"
         + plan.take(2000))
@@ -462,12 +460,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("TotalOrder: range partition + per-pid window, offsets broadcast") {
-    // the two-pass form's physical shape (the UNSERVED path —
-    // smp_token_shards has no budget bound, so it never reads order
-    // stats): one range exchange on the order key (global order across
-    // partitions), the intra-partition window hash-partitioned on _pid,
-    // and the prefix offsets joined by a broadcast — never a
-    // single-partition WindowExec
+    // the two-pass form's physical shape (smp_token_shards, unbounded):
+    // the ordered output's range exchange on the order key, the
+    // intra-bucket window hash-partitioned on _pid, and the prefix
+    // offsets joined by a broadcast — never a single-partition WindowExec
     val plan = physicalPlan("smp_token_shards")
     assert(plan.contains("rangepartitioning(doc_id"),
       "order key must be range-partitioned:\n" + plan.take(3000))
@@ -475,40 +471,89 @@ class PlanAuditSpec extends SparkSpec {
       "window must shuffle on the partition id:\n" + plan.take(3000))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       "prefix offsets must broadcast:\n" + plan.take(3000))
-    // the totals branch and the data branch must SHARE the one slim _pid
-    // exchange (r9): without the reuse each branch re-runs the input
-    // projection — for the token gates a full per-doc tokenize pass
+    // the totals branch and the data branch read ONE broadcast of the
+    // one-row boundary frame (the second is a reuse): one boundary draw
     assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage")
         || plan.contains("table cache"),
       "both TotalOrder branches must read one shared exchange:\n" + plan.take(3000))
   }
 
-  test("token budget gates: served stats collapse the plan to one window pass") {
-    // with order stats landed (the gate body's ensureOrderStats call —
-    // fingerprint-checked against the corpus files), the bounded cut
-    // must carry NO aggregate, NO join, and NO exchange other than the
-    // window's own _pid hash and the presentation sort: bucket ids and
-    // prefix offsets ride as literals, and the scan itself is pruned by
-    // a literal boundary predicate (buckets past the budget never
-    // tokenize). A regression to the totals-recompute shape — a second
-    // corpus pass per cut — flags here.
-    for (gate <- Seq("smp_token_budget", "smp_token_budget_subword")) {
-      val q = SparkEntry.allQueries.find(_.name == gate).get
-      val df = q.run(spark, dir)
+  test("token budget gates: bounded cut prunes below the window over cached counts") {
+    // the in-plan bounded cut: the budget prunes buckets (`_prefix <= b`)
+    // BELOW the intra-bucket window and before the one exchange that
+    // moves rows, so only buckets that can land under the budget
+    // shuffle; the totals cross their own _pid exchange as map-side
+    // partial sums; and every branch reads the cached narrow (doc_id,
+    // n_toks) frame — none re-scans the corpus to re-tokenize it
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      GetStructField, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LogicalFilter,
+      Window => LogicalWindow}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL,
+      ShuffleExchangeExec}
+    // `_prefix <= budget`, on the column or on the prefix struct field
+    // the predicate reaches after pushing through the prefix projection
+    def prunes(cond: org.apache.spark.sql.catalyst.expressions.Expression,
+        budget: Long): Boolean = cond.exists {
+      case LessThanOrEqual(lhs, Literal(v, _)) if v == budget => lhs match {
+        case a: AttributeReference => a.name == "_prefix"
+        case g: GetStructField => g.name.contains("_prefix")
+        case _ => false
+      }
+      case _ => false
+    }
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => w.child
+      case other => other
+    }
+    for ((gate, budget) <- Seq("smp_token_budget" -> 5000L,
+        "smp_token_budget_subword" -> 12000L)) {
+      val df = SparkEntry.allQueries.find(_.name == gate).get.run(spark, dir)
       df.collect()
       val physical = df.queryExecution.executedPlan.toString
       val logical = df.queryExecution.optimizedPlan
-      assert(logical.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.isEmpty, s"$gate: served plan must not aggregate:\n" +
-        physical.take(3000))
-      assert(logical.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.isEmpty, s"$gate: served plan must not join:\n" +
-        physical.take(3000))
-      assert(physical.contains("hashpartitioning(_pid"),
-        s"$gate: window must shuffle on the partition id:\n" +
-          physical.take(3000))
+      val windows = logical.collect {
+        case w: LogicalWindow
+          if w.partitionSpec.exists(_.references.exists(_.name == "_pid")) => w
+      }
+      assert(windows.size == 1, s"$gate: one per-_pid window expected:\n" +
+        logical.toString.take(3000))
+      assert(windows.head.child.exists {
+          case f: LogicalFilter => prunes(f.condition, budget)
+          case _ => false
+        }, s"$gate: `_prefix <= $budget` must sit below the window:\n" +
+          logical.toString.take(3000))
+      // walk the FINAL adaptive plan, query stages included; an
+      // InMemoryTableScan is a leaf here, so a FileScan found by the walk
+      // is one OUTSIDE the cache (a branch re-reading the corpus)
+      val plan = df.queryExecution.executedPlan
+      assert(AqeWalk.collect(plan) { case s: FileSourceScanExec => s }.isEmpty,
+        s"$gate: every branch must read the cached counts:\n$physical")
+      val pidShuffles = AqeWalk.collect(plan) {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.exists(_.references.exists(_.name == "_pid"))
+          case _ => false
+        }) => e
+      }
+      val (rows, totals) = pidShuffles.partition(_.shuffleOrigin == REPARTITION_BY_COL)
+      assert(rows.size == 1, s"$gate: the rows must shuffle on _pid exactly " +
+        s"once, found ${rows.size}:\n$physical")
+      assert(AqeWalk.find(rows.head.child) {
+          case f: FilterExec => prunes(f.condition, budget)
+          case _ => false
+        }.nonEmpty,
+        s"$gate: the budget must prune before the row exchange:\n$physical")
+      assert(totals.forall(e => unwrap(e.child).isInstanceOf[HashAggregateExec]),
+        s"$gate: totals must cross their exchange as partial sums:\n$physical")
+      assert(pidShuffles.forall(e =>
+          AqeWalk.find(e.child)(_.isInstanceOf[InMemoryTableScanExec]).nonEmpty),
+        s"$gate: the _pid exchanges must read the cached counts:\n$physical")
     }
   }
 

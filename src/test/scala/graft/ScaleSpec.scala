@@ -10,15 +10,6 @@ class ScaleSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("eventsTsNanos preserves sub-second precision") {
-    assert(graft.core.Tables.eventsTsNanos("2024-01-25T00:00:00Z")
-      === 1706140800000000000L)
-    assert(graft.core.Tables.eventsTsNanos("2024-01-25T00:00:00.5Z")
-      === 1706140800500000000L)
-    assert(graft.core.Tables.eventsTsNanos("2024-01-25T00:00:00.000000001Z")
-      === 1706140800000000001L)
-  }
-
   test("AQE splits a skewed join partition at runtime (skew=true)") {
     import spark.implicits._
     val saved = Seq(

@@ -46,4 +46,24 @@ class TablesSpec extends SparkSpec {
     assert(!after.queryExecution.analyzed.toString.contains("graft_stats_"),
       "resetAnalyzed must serve plain path reads again")
   }
+
+  test("loading events leaves the session's parquet nanos conf unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    Tables.invalidateCache(spark) // force a fresh build of the relation
+    Tables(spark, dir, "events").limit(1).collect()
+    assert(!spark.sessionState.conf.contains(key),
+      s"loading events must not set $key on the caller's session")
+  }
+
+  test("events: an integer ts is refused with the column and expected type") {
+    import spark.implicits._
+    val longDir = tmpDir("events_long")
+    Seq((1L, 1706140800000000000L)).toDF("event_id", "ts")
+      .write.parquet(Tables.path(longDir, "events"))
+    val e = intercept[IllegalArgumentException](
+      Tables(spark, longDir, "events"))
+    assert(e.getMessage.contains("events column ts must be timestamp_ntz") &&
+      e.getMessage.contains("got bigint"), e.getMessage)
+  }
 }

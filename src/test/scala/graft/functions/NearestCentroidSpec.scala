@@ -140,6 +140,21 @@ class NearestCentroidSpec extends SparkSpec {
     } finally spark.conf.unset("graft.nearestCentroid.maxInlineBytes")
   }
 
+  test("a malformed maxInlineBytes conf fails with a message naming the key") {
+    val emb = graft.core.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val cents = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("ce"))
+    spark.conf.set("graft.nearestCentroid.maxInlineBytes", "4mb")
+    try {
+      val e = intercept[IllegalArgumentException](
+        graft.operators.Similarity.assignCells(
+          emb.select(col("vec_id"), col("embedding")),
+          "vec_id", "embedding", cents, keep = 1))
+      assert(e.getMessage.contains("graft.nearestCentroid.maxInlineBytes") &&
+        e.getMessage.contains("'4mb'"), e.getMessage)
+    } finally spark.conf.unset("graft.nearestCentroid.maxInlineBytes")
+  }
+
   test("operator: assignCells keep=1 output is identical through the kernel path") {
     // end-to-end through the production operator (which now selects the
     // kernel path for bounded centroid frames): compare against the raw

@@ -5,22 +5,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** [[TotalOrder.ensureOrderStats]] + the served bounded cum-sum path:
-  * output-identical to the in-plan computation and to the
-  * single-partition-window ground truth across budget positions (empty
-  * cut, mid-bucket, bucket edge, whole corpus); the served plan carries
-  * NO aggregate (the totals come from the fingerprinted stats table);
-  * stale stats (data rewritten under the same path) are refused with an
-  * in-plan fallback and rebuilt by the next ensure; non-integral weights
-  * never persist (float prefix sums are order-sensitive). */
+/** The bounded [[TotalOrder.globalCumSum]] cut (the token-budget shard
+  * primitive) equals the single-partition-window ground truth across
+  * budget positions (empty cut, mid-bucket, bucket edge, whole corpus,
+  * past the total) and on an empty input; the exclusive frame agrees with
+  * the unbounded path, and a null order key survives the bucket prune. */
 class OrderStatsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def hasAggregate(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }.nonEmpty
 
   /** Single-partition-window ground truth of the budget cut. */
   private def truth(df: DataFrame, b: Long): Seq[Seq[Any]] =
@@ -30,35 +22,25 @@ class OrderStatsSpec extends SparkSpec {
       .filter(col("cum") <= b)
       .orderBy("k").select("k", "cum").collect().map(_.toSeq).toSeq
 
-  private def served(df: DataFrame, b: Long): DataFrame =
+  private def bounded(df: DataFrame, b: Long): DataFrame =
     TotalOrder.globalCumSum(df, "k", "w", "cum",
         inclusive = true, upperBound = Some(b))
       .filter(col("cum") <= b).orderBy("k").select("k", "cum")
 
-  test("served bounded cum-sum equals in-plan path and ground truth") {
+  test("bounded cum-sum equals ground truth across budgets") {
     val dir = tmpDir("ordstats")
     val rnd = new scala.util.Random(7L)
     val rows = (1L to 200L).map(k => (k, 1L + rnd.nextInt(9)))
     rows.toDF("k", "w").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
     val total = rows.map(_._2).sum
-    val budgets = Seq(0L, 3L, total / 3, total / 2 + 1, total, total + 10)
-
-    // in-plan results FIRST (no stats landed yet) — plan must aggregate
-    val inPlan = budgets.map { b =>
-      val q = served(df, b)
-      assert(hasAggregate(q), s"in-plan path for b=$b should aggregate")
-      q.collect().map(_.toSeq).toSeq
-    }
-    TotalOrder.ensureOrderStats(df, "k", "w")
-    budgets.zip(inPlan).foreach { case (b, expected) =>
-      val q = served(df, b)
-      assert(!hasAggregate(q),
-        s"served path for b=$b must carry no aggregate")
-      val got = q.collect().map(_.toSeq).toSeq
-      assert(got === expected, s"served != in-plan at b=$b")
-      assert(got === truth(df, b), s"served != ground truth at b=$b")
-    }
+    for (b <- Seq(0L, 3L, total / 3, total / 2 + 1, total, total + 10))
+      assert(bounded(df, b).collect().map(_.toSeq).toSeq === truth(df, b),
+        s"bounded cut != ground truth at b=$b")
+    val edir = tmpDir("ordstats_empty")
+    Seq.empty[(Long, Long)].toDF("k", "w")
+      .write.mode("overwrite").parquet(edir)
+    assert(bounded(spark.read.parquet(edir), 10L).count() === 0L)
   }
 
   test("exclusive-frame bound and null order keys serve identically") {
@@ -67,58 +49,22 @@ class OrderStatsSpec extends SparkSpec {
       (1L to 60L).map(k => (java.lang.Long.valueOf(k), k % 7 + 1))
     rows.toDF("k", "w").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    def cut(b: Long) =
+    def cut(upperBound: Option[Long]) =
       TotalOrder.globalCumSum(df, "k", "w", "cum",
-          inclusive = false, upperBound = Some(b))
-        .filter(col("cum") <= b).orderBy(asc_nulls_first("k"))
-        .select("k", "cum")
-    val before = cut(40L).collect().map(_.toSeq).toSeq
-    TotalOrder.ensureOrderStats(df, "k", "w")
-    val after = cut(40L)
-    assert(!hasAggregate(after))
-    assert(after.collect().map(_.toSeq).toSeq === before)
-    // the null key buckets to 0 and must survive the scan prune
-    assert(before.exists(_.head == null))
-  }
-
-  test("stale stats are refused in-plan and rebuilt by the next ensure") {
-    val dir = tmpDir("ordstats_stale")
-    (1L to 100L).map(k => (k, 2L)).toDF("k", "w")
-      .write.mode("overwrite").parquet(dir)
-    val df0 = spark.read.parquet(dir)
-    TotalOrder.ensureOrderStats(df0, "k", "w")
-    assert(!hasAggregate(served(df0, 50L)))
-    // rewrite the corpus under the same path: same plan hash, new bytes
-    (1L to 100L).map(k => (k, 5L)).toDF("k", "w")
-      .write.mode("overwrite").parquet(dir)
-    spark.catalog.refreshByPath(dir)
-    val df1 = spark.read.parquet(dir)
-    val q = served(df1, 50L)
-    assert(hasAggregate(q),
-      "stale stats must be refused — totals would be silently wrong")
-    assert(q.collect().map(_.toSeq).toSeq === truth(df1, 50L))
-    // ensure rebuilds against the new fingerprint; serving resumes
-    TotalOrder.ensureOrderStats(df1, "k", "w")
-    val q2 = served(df1, 50L)
-    assert(!hasAggregate(q2))
-    assert(q2.collect().map(_.toSeq).toSeq === truth(df1, 50L))
-  }
-
-  test("non-integral weights never persist; empty input never persists") {
-    val dir = tmpDir("ordstats_dbl")
-    (1L to 50L).map(k => (k, k * 0.5)).toDF("k", "w")
-      .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    TotalOrder.ensureOrderStats(df, "k", "w")
-    assert(hasAggregate(
-      TotalOrder.globalCumSum(df, "k", "w", "cum",
-        inclusive = true, upperBound = Some(10L))))
-    val edir = tmpDir("ordstats_empty")
-    Seq.empty[(Long, Long)].toDF("k", "w")
-      .write.mode("overwrite").parquet(edir)
-    val edf = spark.read.parquet(edir)
-    TotalOrder.ensureOrderStats(edf, "k", "w") // must not throw
-    assert(TotalOrder.globalCumSum(edf, "k", "w", "cum",
-      inclusive = true, upperBound = Some(10L)).count() === 0L)
+          inclusive = false, upperBound = upperBound)
+        .filter(col("cum") <= 40L).orderBy(asc_nulls_first("k"))
+        .select("k", "cum").collect().map(_.toSeq).toSeq
+    val unbounded = cut(None)
+    assert(cut(Some(40L)) === unbounded)
+    // ground truth of the exclusive frame: running sum of the PRECEDING
+    // rows, nulls first
+    val truthRows = df.withColumn("cum",
+        coalesce(sum(col("w")).over(Window.orderBy(asc_nulls_first("k"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .filter(col("cum") <= 40L).orderBy(asc_nulls_first("k"))
+      .select("k", "cum").collect().map(_.toSeq).toSeq
+    assert(unbounded === truthRows)
+    // the null key buckets to 0 and must survive the prune
+    assert(unbounded.exists(_.head == null))
   }
 }
